@@ -96,30 +96,35 @@ GATE_WINDOW = [
     # (b) benched and/or pytest-pinned, and (c) witnessed by a prior
     # round's CORRECTNESS_r{N}.json.
     #
-    # ROUND-13 WINDOW (optimization round 2): leads with (a) the eight
-    # queries whose plans changed in r12's optimization commit AFTER the
-    # r12 window froze — the driver has never hash-checked them post-change
-    # (VERDICT r12 "what's wrong" #1 / next-round #1); (b) every query
-    # whose plan changed in THIS round's optimization batches (HITS
-    # window-normalized recurrence; label-propagation lazy chain;
-    # doc-local winnowing family; fused-exchange item co-occurrence;
-    # top-k pre-reduction consumers); then (c) green representatives of
-    # each family, all driver-witnessed in r01..r12. Every slot is
+    # WINDOW: leads with (a) the twelve queries whose plans changed when
+    # plans/twophase.global_cumsums swapped its lambda bucket expression for
+    # a CASE chain (same results, new plan strings); (b) the queries whose
+    # plans changed in round 13's optimization batches (HITS
+    # window-normalized recurrence; label-propagation lazy chain; doc-local
+    # winnowing family; fused-exchange item co-occurrence; top-k
+    # pre-reduction consumers), minus four the r13 gate already witnessed
+    # (q_word_pmi, q_frequent_itemsets, q_tfidf_top_terms,
+    # dedup_sorted_neighborhood); then (c) green representatives of each
+    # family, all driver-witnessed in r01..r12. The eight r12-changed plans
+    # that used to lead the window were witnessed post-change by the r13
+    # gate (CORRECTNESS_r13.json) and rotated out. Every slot is
     # hash-oracled.
     #
-    # --- r12-changed plans, driver-unverified post-change ---
-    "q_pagerank_suppliers", "q_personalized_pagerank",
-    "q_kcore_suppliers", "q_entity_resolution",
-    "q_dedup_evidence_clusters", "q_fs_review_queue",
-    "dedup_survivors", "q_poisson_bootstrap_ci",
-    # --- r13-changed plans (optimization batches, this round) ---
+    # --- plans changed by the global_cumsums bucket expression ---
+    "q_winsorize_prices", "q_winsorize_prices_approx",
+    "q_quantile_normalize", "q_perplexity_filter",
+    "q_curriculum_shards", "q_ks_test", "q_mann_whitney",
+    "q_kruskal_wallis", "q_negative_sampling_table",
+    "q_partition_balance_planner", "q_selectivity_estimate",
+    "q_cramer_von_mises",
+    # --- r13-changed plans (optimization batches) ---
     "q_hits_authorities", "q_label_propagation",
     "q_winnowing_fingerprints", "q_winnowing_dup_pairs",
     "dedup_incremental_winnow", "q_stream_dedup_winnow",
     "q_dedup_recall_comparison", "q_item_cooccurrence",
-    "q_word_pmi", "q_frequent_itemsets", "q_clustering_coefficient",
-    "q_minhash_estimate_error", "q_tfidf_top_terms",
-    "dedup_sorted_neighborhood", "q_dataset_card_report",
+    "q_clustering_coefficient",
+    "q_minhash_estimate_error",
+    "q_dataset_card_report",
     "q_bm25_search", "q_unigram_logprob",
     #
     # --- green representatives (witnessed r01..r12), one+ per family:

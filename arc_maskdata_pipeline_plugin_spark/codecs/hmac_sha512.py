@@ -2,20 +2,30 @@
 
 The reference's per-row Argon2id at production cost (64 MiB, t=4) is the
 dominant masking cost (SURVEY.md §4). For 100 TB-scale masking where
-per-value memory-hard KDFs are economically impossible, this codec performs
-ONE memory-hard stretch of the passphrase (PBKDF2-SHA512, 262,144 iterations,
-computed once per executor and cached) and then a single HMAC-SHA512 per
-value. Security model: masking strength degrades from per-value KDF to
-keyed-PRF under a KDF-stretched key — appropriate when the passphrase has
-adequate entropy, which the 64-256 char requirement enforces.
+per-value memory-hard KDFs are economically impossible, this codec stretches
+the passphrase ONCE (PBKDF2-SHA512, 262,144 iterations) and then computes a
+single HMAC-SHA512 per value. The stretched key is cached per Python process
+(bounded, keyed on salt and iterations): a reused Spark Python worker
+stretches once for its whole life, however many mask UDF closures (one codec
+copy each) its tasks unpickle. The key is never a codec attribute, so a
+pickled codec carries no key material. Security model: masking strength
+degrades from per-value KDF to keyed-PRF under a KDF-stretched key —
+appropriate when the passphrase has adequate entropy, which the 64-256 char
+requirement enforces.
 """
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import hmac
 
 from . import Codec, DEFAULT_HASH_LENGTH, _env_int, utf8_chars
+
+
+@functools.lru_cache(maxsize=16)
+def _stretch(salt: bytes, iterations: int) -> bytes:
+    return hashlib.pbkdf2_hmac("sha512", salt, salt, iterations, DEFAULT_HASH_LENGTH)
 
 
 class HmacSHA512(Codec):
@@ -27,26 +37,13 @@ class HmacSHA512(Codec):
             "ETL_CONF_MASK_DATA_HMAC_STRETCH_ITERATIONS",
             self.DEFAULT_STRETCH_ITERATIONS,
         )
-        self._key_cache: dict[bytes, bytes] = {}
 
     def params(self) -> str:
         return f"HmacSHA512(stretch={self.stretch_iterations})"
 
-    def _stretched_key(self, salt: bytes) -> bytes:
-        key = self._key_cache.get(salt)
-        if key is None:
-            key = hashlib.pbkdf2_hmac(
-                "sha512", salt, salt, self.stretch_iterations, DEFAULT_HASH_LENGTH
-            )
-            self._key_cache[salt] = key
-        return key
-
     def encrypt(self, value_chars: str, salt: bytes) -> bytes:
         return hmac.new(
-            self._stretched_key(salt), utf8_chars(value_chars), hashlib.sha512
+            _stretch(salt, self.stretch_iterations),
+            utf8_chars(value_chars),
+            hashlib.sha512,
         ).digest()
-
-    def __getstate__(self):
-        state = dict(self.__dict__)
-        state["_key_cache"] = {}  # re-stretch per executor; cheap relative to task
-        return state

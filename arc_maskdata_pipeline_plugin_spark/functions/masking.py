@@ -32,8 +32,10 @@ Documented divergences from the reference (SURVEY.md §7.3):
 Scale design: masking is a stateless projection — no shuffle. The KDF is the
 per-row hot cost, so the UDFs are Arrow-batched and deterministic digests are
 memoized per batch (real data repeats values; non-deterministic mode never
-caches). For 100 TB jobs prefer the additive ``HmacSHA512`` codec
-(one KDF stretch per executor + per-value HMAC).
+caches). For 100 TB jobs prefer the additive ``HmacSHA512`` codec: one
+PBKDF2 stretch per passphrase and iteration count per Python worker process
+(a bounded process-wide cache, never pickled with the UDF closures), then
+one HMAC per value.
 """
 
 from __future__ import annotations

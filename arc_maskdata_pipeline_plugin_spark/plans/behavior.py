@@ -1292,10 +1292,13 @@ def q_item_cooccurrence(spark, sf_dir):
         baskets.select(F.explode(entries).alias("e"))
         .groupBy(F.col("e.p1").alias("p1"), F.col("e.p2").alias("p2"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("c_xy"))
-    )  # 3 consumers (pair split + two item sides) share ONE exchange via
-    # ReuseExchange — verified in plans/r13/q_item_cooccurrence_after.txt;
-    # a persist here would pay a 2.3M-row cache write to save three cheap
-    # post-shuffle reductions
+    )  # 3 consumers (pair split + two item sides) do NOT share one
+    # exchange: each pushes its p2 IS NULL / IS NOT NULL filter below this
+    # aggregate, so plans/r13/q_item_cooccurrence_after.txt shows three
+    # separate scan → collect_set → explode → aggregate branches (three
+    # lineitem scans, no ReusedExchange). Left unpersisted: a persist would
+    # pay a 2.3M-row cache write, and no A/B has yet weighed that against
+    # the repeated branches
     item = counts.filter(F.col("p2").isNull()).select(
         F.col("p1").alias("p"), F.col("c_xy").alias("c")
     )

@@ -180,11 +180,14 @@ def global_cumsums(
         bounds = sorted({x for x in (row["_tp_bs"] or []) if x is not None})
     else:
         bounds = []
-    if bounds:
-        barr = F.array(*[F.lit(x) for x in bounds])
-        bucket = F.size(F.filter(barr, lambda x: x <= lead))
-    else:
-        bucket = F.lit(0)
+    # bucket = number of bounds <= lead, as a CASE chain. Not
+    # size(filter(bounds, x -> x <= lead)): Spark 4.1 can infer a filter
+    # from that lambda alias across the `loc`/`offs` self-join below and
+    # push it, still naming the left side's column, onto the totals branch
+    # (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND as a fresh session's first query).
+    bucket = F.lit(0)
+    for i, x in enumerate(bounds, 1):
+        bucket = F.when(lead >= F.lit(x), i).otherwise(bucket)
     # NOT persisted here — by contract every CALLER persists `df` (the
     # repo's >1-consumer rule; all 8 call sites verified), so deriving the
     # bucket column per consumer is a cheap projection over the caller's

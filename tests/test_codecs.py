@@ -109,14 +109,48 @@ def test_scrypt_reference_cost_params(monkeypatch):
 
 
 def test_hmac_codec_pickles_without_key_cache():
+    """A warmed codec pickles without its stretched key, and the clone
+    hashes identically."""
     import pickle
 
     codec = HmacSHA512()
-    codec.hash("warm", True, PASSPHRASE)
-    assert codec._key_cache
-    clone = pickle.loads(pickle.dumps(codec))
-    assert clone._key_cache == {}
-    assert clone.hash("warm", True, PASSPHRASE) == codec.hash("warm", True, PASSPHRASE)
+    warm = codec.hash("warm", True, PASSPHRASE)
+    salt = PASSPHRASE[len(PASSPHRASE) // 2 :]
+    key = hashlib.pbkdf2_hmac("sha512", salt, salt, codec.stretch_iterations, 64)
+    blob = pickle.dumps(codec)
+    assert key not in blob
+    assert pickle.loads(blob).hash("warm", True, PASSPHRASE) == warm
+
+
+def test_hmac_stretches_once_per_salt_and_iterations(monkeypatch):
+    """Fresh instances and pickle round-trips share one stretch per
+    (salt, iterations) in a process; each pair gets its own key."""
+    import hmac
+    import pickle
+    import secrets
+
+    real = hashlib.pbkdf2_hmac
+    calls = []
+
+    def counting(name, password, salt, iterations, dklen=None):
+        calls.append((salt, iterations))
+        return real(name, password, salt, iterations, dklen)
+
+    monkeypatch.setattr(hashlib, "pbkdf2_hmac", counting)
+    # fresh passphrases, so no earlier hash in this process warmed their keys
+    passphrases = [secrets.token_hex(32).encode() for _ in range(2)]
+    for iterations in (1000, 2000):
+        monkeypatch.setenv("ETL_CONF_MASK_DATA_HMAC_STRETCH_ITERATIONS", str(iterations))
+        for p in passphrases:
+            fresh = [HmacSHA512() for _ in range(3)]
+            codecs = fresh + [pickle.loads(pickle.dumps(c)) for c in fresh]
+            pepper, salt = p[:32], p[32:]
+            key = real("sha512", salt, salt, iterations, 64)
+            expected = hmac.new(key, b"v" + pepper, hashlib.sha512).digest()
+            assert {c.hash("v", True, p) for c in codecs} == {expected}
+    assert sorted(calls) == sorted(
+        (p[32:], i) for p in passphrases for i in (1000, 2000)
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import math
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 
@@ -48,10 +48,13 @@ def _threshold_reference(values: list[int], p: float) -> int:
 # 12 examples, not 60 (r13): every example runs a full Spark
 # createDataFrame→aggregate→collect round-trip (~1.6 s each), so this one
 # test dominated the suite's wall clock (99 s of a 35-min run). The same
-# plan shape is exercised by every draw; rank-boundary coverage at p≈k/n
-# edges is preserved by hypothesis shrinking, and the operator is
+# plan shape is exercised by every draw; the rank boundaries (p = k/n,
+# p = 1.0, a single value) are pinned by the @examples, and the operator is
 # additionally pinned by test_grouped_quantiles + the oracle-checked
 # consumers (q_rfm_segments, q_winsorize_prices).
+@example(values=[5, -3, 8, 1, 0], p=0.4)  # p = k/n, inexact as a float
+@example(values=[5, -3, 8, 1, 0], p=1.0)
+@example(values=[42], p=0.3)
 @settings(max_examples=12, deadline=None)
 def test_quantile_thresholds_exact_matches_disc_reference(spark, values, p):
     from pyspark.sql import functions as F
