@@ -24,6 +24,7 @@ Configuration surface (reference: MaskDataPlugin.scala:31-51):
 from __future__ import annotations
 
 import os
+from typing import Iterable
 
 PASSPHRASE_ENV = "ETL_CONF_MASK_DATA_PASSPHRASE"
 CODEC_ENV = "ETL_CONF_MASK_DATA_CODEC"
@@ -45,6 +46,13 @@ class Codec:
     Instances are plain-attribute objects so they pickle into UDF closures and
     re-initialise cheaply on each executor (the reference notes its codecs are
     re-initialised per executor, MaskDataPlugin.scala:40).
+
+    ``hash_batch(values, deterministic, passphrase)`` is the batch entry the
+    mask UDFs call once per Arrow batch: it returns ``hash`` of each value, in
+    order, byte for byte, and in non-deterministic mode draws fresh random
+    bytes for every value (duplicates included). The default loops over
+    ``hash``; a codec overrides it only to hoist per-call set-up out of the
+    loop.
     """
 
     name: str = "?"
@@ -64,10 +72,18 @@ class Codec:
             return self.encrypt(value + pepper.decode("latin-1"), salt)
         return os.urandom(DEFAULT_HASH_LENGTH)
 
+    def hash_batch(
+        self, values: Iterable[str], deterministic: bool, passphrase: bytes
+    ) -> list[bytes]:
+        return [self.hash(v, deterministic, passphrase) for v in values]
+
     def hash_long(self, value: str, deterministic: bool, passphrase: bytes) -> int:
-        return int.from_bytes(
-            self.hash(value, deterministic, passphrase)[:8], "big", signed=True
-        )
+        return digest_long(self.hash(value, deterministic, passphrase))
+
+
+def digest_long(digest: bytes) -> int:
+    """First 8 digest bytes as a signed big-endian long (``ByteBuffer.getLong``)."""
+    return int.from_bytes(digest[:8], "big", signed=True)
 
 
 def utf8_chars(value_chars: str) -> bytes:

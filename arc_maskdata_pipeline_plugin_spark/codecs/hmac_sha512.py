@@ -7,8 +7,12 @@ the passphrase ONCE (PBKDF2-SHA512, 262,144 iterations) and then computes a
 single HMAC-SHA512 per value. The stretched key is cached per Python process
 (bounded, keyed on salt and iterations): a reused Spark Python worker
 stretches once for its whole life, however many mask UDF closures (one codec
-copy each) its tasks unpickle. The key is never a codec attribute, so a
-pickled codec carries no key material. Security model: masking strength
+copy each) its tasks unpickle. Next to each stretched key the process caches
+an HMAC object already keyed with it; every value's HMAC starts from a copy
+of that state instead of re-keying. Neither the key nor the keyed state is
+ever a codec attribute, so a pickled codec carries no key material.
+``hash_batch`` also splits the passphrase and encodes the pepper once per
+batch, not once per value. Security model: masking strength
 degrades from per-value KDF to keyed-PRF under a KDF-stretched key —
 appropriate when the passphrase has adequate entropy, which the 64-256 char
 requirement enforces.
@@ -28,6 +32,11 @@ def _stretch(salt: bytes, iterations: int) -> bytes:
     return hashlib.pbkdf2_hmac("sha512", salt, salt, iterations, DEFAULT_HASH_LENGTH)
 
 
+@functools.lru_cache(maxsize=16)
+def _keyed(salt: bytes, iterations: int) -> hmac.HMAC:
+    return hmac.new(_stretch(salt, iterations), digestmod=hashlib.sha512)
+
+
 class HmacSHA512(Codec):
     name = "HmacSHA512"
     DEFAULT_STRETCH_ITERATIONS = 262144
@@ -42,8 +51,20 @@ class HmacSHA512(Codec):
         return f"HmacSHA512(stretch={self.stretch_iterations})"
 
     def encrypt(self, value_chars: str, salt: bytes) -> bytes:
-        return hmac.new(
-            _stretch(salt, self.stretch_iterations),
-            utf8_chars(value_chars),
-            hashlib.sha512,
-        ).digest()
+        h = _keyed(salt, self.stretch_iterations).copy()
+        h.update(utf8_chars(value_chars))
+        return h.digest()
+
+    def hash_batch(self, values, deterministic, passphrase):
+        if not deterministic:
+            return super().hash_batch(values, deterministic, passphrase)
+        half = len(passphrase) // 2
+        # utf8(value + pepper chars) == utf8(value) + utf8(pepper chars)
+        pepper = utf8_chars(passphrase[:half].decode("latin-1"))
+        copy = _keyed(passphrase[half:], self.stretch_iterations).copy
+        out = []
+        for v in values:
+            h = copy()
+            h.update(v.encode("utf-8") + pepper)
+            out.append(h.digest())
+        return out

@@ -30,9 +30,16 @@ Documented divergences from the reference (SURVEY.md §7.3):
   this flag and Spark may CSE duplicate calls (SURVEY.md §4).
 
 Scale design: masking is a stateless projection — no shuffle. The KDF is the
-per-row hot cost, so the UDFs are Arrow-batched and deterministic digests are
-memoized per batch (real data repeats values; non-deterministic mode never
-caches). For 100 TB jobs prefer the additive ``HmacSHA512`` codec: one
+per-row hot cost, so the UDFs are Arrow-batched and every mask UDF makes ONE
+codec call (``Codec.hash_batch``) per Arrow batch: over the batch's distinct
+non-null values when deterministic (real data repeats values), over every
+non-null row when not (each row draws its own random bytes). The results are
+gathered back to the rows by their factorize codes, so NULL stays NULL.
+Alphabet encoding (a 256-entry ``bytes.translate`` table for alphabets within
+U+00FF), truncation, formatting and the date/decimal shifts run once per
+distinct value; timestamps are formatted and shifted as numpy ``datetime64``
+arrays. The per-value ``mask_*_value`` functions stay the reference the batch
+path must equal. For 100 TB jobs prefer the additive ``HmacSHA512`` codec: one
 PBKDF2 stretch per passphrase and iteration count per Python worker process
 (a bounded process-wide cache, never pickled with the UDF closures), then
 one HMAC per value.
@@ -42,15 +49,18 @@ from __future__ import annotations
 
 import datetime as dt
 import decimal
+import functools
 import math
 from decimal import Decimal
+from functools import partial
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DateType, DecimalType, StringType, TimestampType
 
-from ..codecs import Codec, get_codec, get_passphrase
+from ..codecs import Codec, digest_long, get_codec, get_passphrase
 
 DEFAULT_ALPHABET = "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ"
 
@@ -58,14 +68,29 @@ DEFAULT_ALPHABET = "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ"
 _DECIMAL128 = decimal.Context(prec=34, rounding=decimal.ROUND_HALF_EVEN)
 
 
+def _alphabet_index(b: int, n: int) -> int:
+    return abs(b - 256 if b > 127 else b) % n
+
+
+@functools.lru_cache(maxsize=64)
+def _byte_table(alphabet: str) -> bytes | None:
+    """``encode_as_string`` as a 256-entry ``bytes.translate`` table, or None
+    when the alphabet is empty or has a char beyond U+00FF (latin-1)."""
+    if not alphabet or max(map(ord, alphabet)) > 0xFF:
+        return None
+    n = len(alphabet)
+    return "".join(alphabet[_alphabet_index(b, n)] for b in range(256)).encode("latin-1")
+
+
 def encode_as_string(digest: bytes, alphabet: str) -> str:
     """Byte→char mapping, bit-compatible with the reference
     (``alphabet(Math.abs(byte.toInt) % alphabet.length)``; note
     ``Math.abs(-128) = 128`` on the int-widened value)."""
+    table = _byte_table(alphabet)
+    if table is not None:
+        return digest.translate(table).decode("latin-1")
     n = len(alphabet)
-    return "".join(
-        alphabet[abs(b - 256 if b > 127 else b) % n] for b in digest
-    )
+    return "".join(alphabet[_alphabet_index(b, n)] for b in digest)
 
 
 def truncate_string(value: str, length: int, algorithm: str) -> str:
@@ -93,6 +118,13 @@ def apply_format(encoded: str, fmt: str, algorithm: str) -> str:
     return "".join(out)
 
 
+@functools.lru_cache(maxsize=64)
+def _format_template(fmt: str) -> tuple[str, int]:
+    """``fmt`` as a ``%`` template with one ``%s`` per ``x``, and the number of
+    ``x``s: ``template % tuple(encoded[:slots])`` equals ``apply_format``."""
+    return fmt.replace("%", "%%").replace("x", "%s"), fmt.count("x")
+
+
 def java_rem(a: int, b: int) -> int:
     """Java ``%``: truncated-division remainder, sign follows the dividend."""
     r = abs(a) % abs(b)
@@ -108,6 +140,17 @@ def java_timestamp_str(ts) -> str:
         f"{ts.year:04d}-{ts.month:02d}-{ts.day:02d} "
         f"{ts.hour:02d}:{ts.minute:02d}:{ts.second:02d}.{frac}"
     )
+
+
+def _java_timestamp_strs(ns: np.ndarray) -> list[str]:
+    """``java_timestamp_str`` over int64 epoch nanoseconds. Floor division
+    keeps the fraction non-negative before 1970, as ``pd.Timestamp`` does."""
+    secs, nanos = np.divmod(ns, 1_000_000_000)
+    whole = np.datetime_as_string(secs.astype("datetime64[s]"))  # YYYY-MM-DDTHH:MM:SS
+    return [
+        f"{w[:10]} {w[11:]}.{f'{n:09d}'.rstrip('0') or '0'}"
+        for w, n in zip(whole.tolist(), nanos.tolist())
+    ]
 
 
 def mask_string_value(
@@ -164,6 +207,25 @@ def luhn_valid(number: str) -> bool:
     return luhn_check_digit(digits[:-1]) == digits[-1]
 
 
+def _card_digits(value: str, algorithm: str) -> str:
+    digits = "".join(c for c in value if c.isdigit())
+    if len(digits) < 8:
+        raise ValueError(
+            f"'{algorithm}' mask_credit_card requires >= 8 digits, got {len(digits)}"
+        )
+    return digits
+
+
+def _card_layout(value: str, digits: str, digest: bytes, algorithm: str) -> str:
+    """Keep the BIN, fill the account digits from ``digest``, recompute the
+    Luhn digit, and lay the result out in ``value``'s separators."""
+    encoded = encode_as_string(digest, "0123456789")
+    body = digits[:6] + truncate_string(encoded, len(digits) - 7, algorithm)
+    card = body + luhn_check_digit(body)
+    it = iter(card)
+    return "".join(next(it) if c.isdigit() else c for c in value)
+
+
 def mask_credit_card_value(
     codec: Codec, passphrase: bytes, deterministic: bool, value: str | None
 ) -> str | None:
@@ -181,30 +243,101 @@ def mask_credit_card_value(
     """
     if value is None:
         return None
-    digits = "".join(c for c in value if c.isdigit())
-    if len(digits) < 8:
-        raise ValueError(
-            f"'{codec.name}' mask_credit_card requires >= 8 digits, got {len(digits)}"
-        )
-    encoded = encode_as_string(
-        codec.hash(digits, deterministic, passphrase), "0123456789"
+    digits = _card_digits(value, codec.name)
+    return _card_layout(
+        value, digits, codec.hash(digits, deterministic, passphrase), codec.name
     )
-    body = digits[:6] + truncate_string(encoded, len(digits) - 7, codec.name)
-    card = body + luhn_check_digit(body)
-    it = iter(card)
-    return "".join(next(it) if c.isdigit() else c for c in value)
+
+
+@functools.lru_cache(maxsize=64)
+def _java_pow10(scale: int) -> Decimal:
+    return Decimal(math.pow(10, scale))  # exact binary value, as Java sees it
+
+
+def _decimal_shift(value: Decimal, range_: Decimal, digest: bytes) -> Decimal:
+    scale = max(0, -value.as_tuple().exponent)
+    # BigDecimal(long) / BigDecimal(Math.pow(10, scale)) under DECIMAL128
+    random_decimal = _DECIMAL128.divide(Decimal(digest_long(digest)), _java_pow10(scale))
+    rem = _DECIMAL128.remainder(random_decimal, range_)
+    return _DECIMAL128.add(value, rem)
 
 
 def mask_decimal_value(codec, passphrase, range_: Decimal, deterministic, value):
     if value is None:
         return None
-    scale = max(0, -value.as_tuple().exponent)
-    first8 = int.from_bytes(codec.hash(str(value), deterministic, passphrase)[:8], "big", signed=True)
-    # BigDecimal(long) / BigDecimal(Math.pow(10, scale)) under DECIMAL128
-    pow10 = Decimal(math.pow(10, scale))  # exact binary value, as Java sees it
-    random_decimal = _DECIMAL128.divide(Decimal(first8), pow10)
-    rem = _DECIMAL128.remainder(random_decimal, range_)
-    return _DECIMAL128.add(value, rem)
+    return _decimal_shift(value, range_, codec.hash(str(value), deterministic, passphrase))
+
+
+# ---------------------------------------------------------------------------
+# Batch kernels: each maps an array of non-null values to their masks with ONE
+# codec call and equals its mask_*_value function value by value.
+# ---------------------------------------------------------------------------
+
+
+def _mask_strings(codec, passphrase, length, alphabet, fmt, deterministic, values):
+    digests = codec.hash_batch(values, deterministic, passphrase)
+    table = _byte_table(alphabet)
+    if table is None:
+        encoded = [encode_as_string(d, alphabet) for d in digests]
+    else:
+        encoded = [d.translate(table).decode("latin-1") for d in digests]
+    # the shortest encoding fails first, with the per-value path's message
+    shortest = min(encoded, key=len)
+    if fmt is None:
+        truncate_string(shortest, length, codec.name)
+        return [e[:length] for e in encoded]
+    apply_format(shortest, fmt, codec.name)
+    template, slots = _format_template(fmt)
+    return [template % tuple(e[:slots]) for e in encoded]
+
+
+def _mask_dates(codec, passphrase, range_, deterministic, values):
+    digests = codec.hash_batch([v.isoformat() for v in values], deterministic, passphrase)
+    return [
+        v + dt.timedelta(days=java_rem(digest_long(d), range_))
+        for v, d in zip(values, digests)
+    ]
+
+
+def _mask_timestamps(codec, passphrase, range_, deterministic, values):
+    ts = values.astype("datetime64[ns]")
+    digests = codec.hash_batch(_java_timestamp_strs(ts.view("i8")), deterministic, passphrase)
+    days = np.array([java_rem(digest_long(d), range_) for d in digests], dtype=np.int64)
+    # pandas checks the add for datetime64[ns] overflow; bare numpy would wrap
+    return (pd.DatetimeIndex(ts) + pd.to_timedelta(days, unit="D")).to_numpy()
+
+
+def _mask_decimals(codec, passphrase, range_, deterministic, values):
+    digests = codec.hash_batch([str(v) for v in values], deterministic, passphrase)
+    return [_decimal_shift(v, range_, d) for v, d in zip(values, digests)]
+
+
+def _mask_cards(codec, passphrase, deterministic, values):
+    digits = [_card_digits(v, codec.name) for v in values]
+    digests = codec.hash_batch(digits, deterministic, passphrase)
+    return [
+        _card_layout(v, n, d, codec.name) for v, n, d in zip(values, digits, digests)
+    ]
+
+
+def _mask_batch(
+    values: pd.Series, deterministic: bool, kernel, dtype=object, null=None
+) -> pd.Series:
+    """Run ``kernel`` once on the batch's non-null values and gather its
+    results back to the rows: distinct values when deterministic, every
+    non-null row when not (each row gets its own randomness). NULL rows stay
+    ``null``; an all-NULL batch never reaches the kernel, so it never raises."""
+    if deterministic:
+        codes, uniques = pd.factorize(values)  # NULL → code -1
+    else:
+        present = values.notna().to_numpy()
+        codes = np.where(present, np.cumsum(present) - 1, -1)
+        uniques = values[present]
+    out = np.empty(len(uniques) + 1, dtype=dtype)
+    out[-1] = null  # code -1 gathers this slot
+    if len(uniques):
+        out[:-1] = kernel(np.asarray(uniques))
+    return pd.Series(out[codes])
 
 
 def _const(series: pd.Series):
@@ -242,19 +375,8 @@ def register_udfs(
     passphrase = passphrase or get_passphrase()
 
     def _mask_string_batch(length, alphabet, fmt, deterministic, values: pd.Series):
-        cache: dict[str, str] = {}
-        out = []
-        for v in values:
-            if v is None:
-                out.append(None)
-            elif deterministic and v in cache:
-                out.append(cache[v])
-            else:
-                m = mask_string_value(codec, passphrase, length, alphabet, fmt, deterministic, v)
-                if deterministic:
-                    cache[v] = m
-                out.append(m)
-        return pd.Series(out, dtype="object")
+        kernel = partial(_mask_strings, codec, passphrase, length, alphabet, fmt, deterministic)
+        return _mask_batch(values, deterministic, kernel)
 
     @pandas_udf(StringType())
     def mask_string(length, deterministic, value):
@@ -281,72 +403,25 @@ def register_udfs(
     @pandas_udf(DateType())
     def mask_date(range_, deterministic, value):
         r, det = int(_const(range_)), bool(_const(deterministic))
-        cache: dict = {}
-        out = []
-        for v in value:
-            if v is None or (isinstance(v, float) and math.isnan(v)):
-                out.append(None)
-            elif det and v in cache:
-                out.append(cache[v])
-            else:
-                m = mask_date_value(codec, passphrase, r, det, v)
-                if det:
-                    cache[v] = m
-                out.append(m)
-        return pd.Series(out, dtype="object")
+        return _mask_batch(value, det, partial(_mask_dates, codec, passphrase, r, det))
 
     @pandas_udf(TimestampType())
     def mask_timestamp(range_, deterministic, value):
         r, det = int(_const(range_)), bool(_const(deterministic))
-        cache: dict = {}
-        out = []
-        for v in value:
-            if v is None or pd.isna(v):
-                out.append(None)
-            elif det and v in cache:
-                out.append(cache[v])
-            else:
-                m = mask_timestamp_value(codec, passphrase, r, det, v)
-                if det:
-                    cache[v] = m
-                out.append(m)
-        return pd.Series(out)
+        kernel = partial(_mask_timestamps, codec, passphrase, r, det)
+        return _mask_batch(value, det, kernel, "datetime64[ns]", np.datetime64("NaT"))
 
     @pandas_udf(DecimalType(38, 18))
     def mask_decimal(range_, deterministic, value):
         r, det = _const(range_), bool(_const(deterministic))
         if r is not None and not isinstance(r, Decimal):
             r = Decimal(str(r))
-        cache: dict = {}
-        out = []
-        for v in value:
-            if v is None:
-                out.append(None)
-            elif det and v in cache:
-                out.append(cache[v])
-            else:
-                m = mask_decimal_value(codec, passphrase, r, det, v)
-                if det:
-                    cache[v] = m
-                out.append(m)
-        return pd.Series(out, dtype="object")
+        return _mask_batch(value, det, partial(_mask_decimals, codec, passphrase, r, det))
 
     @pandas_udf(StringType())
     def mask_credit_card(deterministic, value):
         det = bool(_const(deterministic))
-        cache: dict = {}
-        out = []
-        for v in value:
-            if v is None:
-                out.append(None)
-            elif det and v in cache:
-                out.append(cache[v])
-            else:
-                m = mask_credit_card_value(codec, passphrase, det, v)
-                if det:
-                    cache[v] = m
-                out.append(m)
-        return pd.Series(out, dtype="object")
+        return _mask_batch(value, det, partial(_mask_cards, codec, passphrase, det))
 
     # deterministic=false returns SecureRandom bytes → the functions must be
     # nondeterministic or Catalyst may common-subexpression-eliminate calls.

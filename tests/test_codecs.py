@@ -109,17 +109,41 @@ def test_scrypt_reference_cost_params(monkeypatch):
 
 
 def test_hmac_codec_pickles_without_key_cache():
-    """A warmed codec pickles without its stretched key, and the clone
-    hashes identically."""
+    """A codec warmed by ``hash`` or ``hash_batch`` pickles without its
+    stretched key or keyed HMAC state, and the clone hashes identically."""
     import pickle
 
-    codec = HmacSHA512()
-    warm = codec.hash("warm", True, PASSPHRASE)
     salt = PASSPHRASE[len(PASSPHRASE) // 2 :]
-    key = hashlib.pbkdf2_hmac("sha512", salt, salt, codec.stretch_iterations, 64)
-    blob = pickle.dumps(codec)
-    assert key not in blob
-    assert pickle.loads(blob).hash("warm", True, PASSPHRASE) == warm
+    warm_ups = {
+        "hash": lambda c: c.hash("warm", True, PASSPHRASE),
+        "hash_batch": lambda c: c.hash_batch(["warm"], True, PASSPHRASE)[0],
+    }
+    for name, warm_up in warm_ups.items():
+        codec = HmacSHA512()
+        warm = warm_up(codec)
+        key = hashlib.pbkdf2_hmac("sha512", salt, salt, codec.stretch_iterations, 64)
+        blob = pickle.dumps(codec)
+        assert key not in blob, name
+        clone = pickle.loads(blob)
+        assert vars(clone) == {"stretch_iterations": codec.stretch_iterations}, name
+        assert clone.hash("warm", True, PASSPHRASE) == warm, name
+
+
+def test_hmac_hash_batch_equals_hash():
+    """The batch override splits the passphrase once and copies a cached keyed
+    HMAC; its bytes equal ``hash`` for every value, in order, duplicates and
+    non-ASCII included, also when the pepper half has bytes >= 0x80 (one
+    latin-1 char each, two UTF-8 bytes)."""
+    codec = HmacSHA512()
+    values = ["", "important", "important", "é", "日本語", "𐍈 astral", "a\x00b", "x" * 300]
+    high_pepper = bytes(range(0x80, 0xA0)) + PASSPHRASE[32:]
+    for passphrase in (PASSPHRASE, high_pepper):
+        want = [codec.hash(v, True, passphrase) for v in values]
+        assert codec.hash_batch(values, True, passphrase) == want
+        assert codec.hash_batch([], True, passphrase) == []
+    random = codec.hash_batch(["v", "v"], False, PASSPHRASE)
+    assert len(random) == 2 and random[0] != random[1]
+    assert all(len(d) == 64 for d in random)
 
 
 def test_hmac_stretches_once_per_salt_and_iterations(monkeypatch):
