@@ -96,7 +96,10 @@ GATE_WINDOW = [
     # (b) benched and/or pytest-pinned, and (c) witnessed by a prior
     # round's CORRECTNESS_r{N}.json.
     #
-    # WINDOW: leads with (a) the twelve queries whose plans changed when
+    # WINDOW: leads with the two queries whose plans changed when the
+    # HmacSHA512 mask functions moved into the JVM (displacing the witnessed
+    # masking representatives q_mask_credit_cards and q_fake_substitution);
+    # then (a) the twelve queries whose plans changed when
     # plans/twophase.global_cumsums swapped its lambda bucket expression for
     # a CASE chain (same results, new plan strings); (b) the queries whose
     # plans changed in round 13's optimization batches (HITS
@@ -110,6 +113,9 @@ GATE_WINDOW = [
     # gate (CORRECTNESS_r13.json) and rotated out. Every slot is
     # hash-oracled.
     #
+    # --- plans changed when the HmacSHA512 mask functions became JVM
+    #     UDFs (ScalaUDF in place of ArrowEvalPython) ---
+    "q_mask_customers", "q_mask_order_dates",
     # --- plans changed by the global_cumsums bucket expression ---
     "q_winsorize_prices", "q_winsorize_prices_approx",
     "q_quantile_normalize", "q_perplexity_filter",
@@ -132,7 +138,6 @@ GATE_WINDOW = [
     #     language/LM, streaming, lakeops/CBO, tokenizer families,
     #     trend/drift, linkage, sketches ---
     "q1_pricing_summary", "q_userdata_lifecycle", "q_mask_customers_pbkdf2",
-    "q_mask_credit_cards", "q_fake_substitution",
     "dedup_minhash_pairs_fast", "q_lsh_band_sweep",
     "q_source_copy_direction", "q_margin_mining_pairs",
     "q_kneser_ney_perplexity", "q_naive_bayes_langid",

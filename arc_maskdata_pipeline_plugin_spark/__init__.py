@@ -6,7 +6,8 @@ Layers (SURVEY.md §7):
   * ``session``   — SparkSession factory tuned for large-scale parquet analytics.
   * ``codecs``    — key-derivation codecs (PBKDF2-HMAC-SHA512, SCrypt, Argon2id,
                     plus a fast HMAC codec) powering deterministic masking.
-  * ``functions`` — the six reference mask UDFs as Arrow-vectorized pandas UDFs,
+  * ``functions`` — the reference mask UDFs (JVM UDFs under ``HmacSHA512``,
+                    Arrow-vectorized pandas UDFs under the other codecs),
                     plus text-analysis / similarity scalar helpers.
   * ``operators`` — pipeline stages (extract / typing / sql / mask / load) and
                     large-scale data ops (dedup, similarity, text, multimodal).

@@ -48,11 +48,12 @@ class Codec:
     re-initialised per executor, MaskDataPlugin.scala:40).
 
     ``hash_batch(values, deterministic, passphrase)`` is the batch entry the
-    mask UDFs call once per Arrow batch: it returns ``hash`` of each value, in
-    order, byte for byte, and in non-deterministic mode draws fresh random
-    bytes for every value (duplicates included). The default loops over
-    ``hash``; a codec overrides it only to hoist per-call set-up out of the
-    loop.
+    pandas mask UDFs (every codec but ``HmacSHA512``, whose mask functions
+    run in the JVM) call once per Arrow batch: it returns ``hash`` of each
+    value, in order, byte for byte, and in non-deterministic mode draws fresh
+    random bytes for every value (duplicates included). The default loops
+    over ``hash``; a codec overrides it only to hoist per-call set-up out of
+    the loop.
     """
 
     name: str = "?"

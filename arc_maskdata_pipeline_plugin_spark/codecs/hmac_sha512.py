@@ -4,18 +4,18 @@ The reference's per-row Argon2id at production cost (64 MiB, t=4) is the
 dominant masking cost (SURVEY.md §4). For 100 TB-scale masking where
 per-value memory-hard KDFs are economically impossible, this codec stretches
 the passphrase ONCE (PBKDF2-SHA512, 262,144 iterations) and then computes a
-single HMAC-SHA512 per value. The stretched key is cached per Python process
-(bounded, keyed on salt and iterations): a reused Spark Python worker
-stretches once for its whole life, however many mask UDF closures (one codec
-copy each) its tasks unpickle. Next to each stretched key the process caches
-an HMAC object already keyed with it; every value's HMAC starts from a copy
-of that state instead of re-keying. Neither the key nor the keyed state is
-ever a codec attribute, so a pickled codec carries no key material.
-``hash_batch`` also splits the passphrase and encodes the pepper once per
-batch, not once per value. Security model: masking strength
-degrades from per-value KDF to keyed-PRF under a KDF-stretched key —
-appropriate when the passphrase has adequate entropy, which the 64-256 char
-requirement enforces.
+single HMAC-SHA512 per value. Security model: masking strength degrades from
+per-value KDF to keyed-PRF under a KDF-stretched key — appropriate when the
+passphrase has adequate entropy, which the 64-256 char requirement enforces.
+
+The registered mask functions under this codec do not run this class: they
+are JVM UDFs (``functions/MaskUdfs.java``) that stretch once per JVM per
+(salt, iterations) and keep keyed ``Mac`` state per thread. This class is the
+per-value reference they are tested against, and it keys the FPE functions.
+Here the stretched key is cached per Python process (bounded, keyed on salt
+and iterations) next to an HMAC object already keyed with it; each value's
+HMAC starts from a copy of that state. Neither is ever a codec attribute, so
+a pickled codec carries no key material.
 """
 
 from __future__ import annotations
@@ -54,17 +54,3 @@ class HmacSHA512(Codec):
         h = _keyed(salt, self.stretch_iterations).copy()
         h.update(utf8_chars(value_chars))
         return h.digest()
-
-    def hash_batch(self, values, deterministic, passphrase):
-        if not deterministic:
-            return super().hash_batch(values, deterministic, passphrase)
-        half = len(passphrase) // 2
-        # utf8(value + pepper chars) == utf8(value) + utf8(pepper chars)
-        pepper = utf8_chars(passphrase[:half].decode("latin-1"))
-        copy = _keyed(passphrase[half:], self.stretch_iterations).copy
-        out = []
-        for v in values:
-            h = copy()
-            h.update(v.encode("utf-8") + pepper)
-            out.append(h.digest())
-        return out

@@ -1,4 +1,6 @@
-"""The six reference masking functions, as Arrow-vectorized pandas UDFs.
+"""The reference masking functions (plus ``mask_credit_card``), as JVM UDFs
+under the ``HmacSHA512`` codec and as Arrow-vectorized pandas UDFs under the
+per-value KDF codecs.
 
 Reference semantics (src/main/scala/ai/tripl/arc/udf/MaskDataPlugin.scala):
 
@@ -29,20 +31,25 @@ Documented divergences from the reference (SURVEY.md §7.3):
   ``deterministic=false`` mode returns random bytes — the reference forgot
   this flag and Spark may CSE duplicate calls (SURVEY.md §4).
 
-Scale design: masking is a stateless projection — no shuffle. The KDF is the
-per-row hot cost, so the UDFs are Arrow-batched and every mask UDF makes ONE
-codec call (``Codec.hash_batch``) per Arrow batch: over the batch's distinct
-non-null values when deterministic (real data repeats values), over every
-non-null row when not (each row draws its own random bytes). The results are
-gathered back to the rows by their factorize codes, so NULL stays NULL.
-Alphabet encoding (a 256-entry ``bytes.translate`` table for alphabets within
-U+00FF), truncation, formatting and the date/decimal shifts run once per
-distinct value; timestamps are formatted and shifted as numpy ``datetime64``
-arrays. The per-value ``mask_*_value`` functions stay the reference the batch
-path must equal. For 100 TB jobs prefer the additive ``HmacSHA512`` codec: one
-PBKDF2 stretch per passphrase and iteration count per Python worker process
-(a bounded process-wide cache, never pickled with the UDF closures), then
-one HMAC per value.
+Scale design: masking is a stateless projection — no shuffle. Under the
+``HmacSHA512`` codec, the one meant for 100 TB jobs, ``register_udfs``
+registers the seven functions as JVM UDFs compiled from ``MaskUdfs.java``,
+as the reference registers Scala UDFs: no Python worker and no Arrow hop,
+one PBKDF2 stretch per passphrase and iteration count per JVM, and keyed
+``Mac`` state per thread, neither serialized with the UDFs; then one HMAC per
+row. Their parameters are evaluated per row.
+
+Under the per-value KDF codecs (PBKDF2, SCrypt, Argon2) the KDF is the
+per-row hot cost, so the UDFs are Arrow-batched pandas UDFs and every mask
+UDF makes ONE codec call (``Codec.hash_batch``) per Arrow batch: over the
+batch's distinct non-null values when deterministic (real data repeats
+values), over every non-null row when not (each row draws its own random
+bytes). The results are gathered back to the rows by their factorize codes,
+so NULL stays NULL. Alphabet encoding (a 256-entry ``bytes.translate`` table
+for alphabets within U+00FF), truncation, formatting and the date/decimal
+shifts run once per distinct value; timestamps are formatted and shifted as
+numpy ``datetime64`` arrays. The per-value ``mask_*_value`` functions are the
+reference both paths must equal.
 """
 
 from __future__ import annotations
@@ -56,11 +63,14 @@ from functools import partial
 
 import numpy as np
 import pandas as pd
+from py4j.java_gateway import JavaClass
 from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DateType, DecimalType, StringType, TimestampType
 
-from ..codecs import Codec, digest_long, get_codec, get_passphrase
+from ..codecs import Codec, MaskDataCodecError, digest_long, get_codec, get_passphrase
+from ..codecs.hmac_sha512 import HmacSHA512
+from ..session import mask_udfs_jar
 
 DEFAULT_ALPHABET = "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ"
 
@@ -343,7 +353,7 @@ def _mask_batch(
 def _const(series: pd.Series):
     """Literal args arrive as constant Series; pull the scalar once.
 
-    These UDFs accept LITERAL arguments only (matching how the reference's
+    The pandas UDFs accept LITERAL arguments only (matching how the reference's
     pipelines call them — treatment params are config constants). A real
     per-row column here would silently apply the first row's value to the
     whole Arrow batch, so a non-constant Series is rejected loudly.
@@ -358,21 +368,39 @@ def _const(series: pd.Series):
     return series.iloc[0]
 
 
+def _register_jvm_udfs(spark, prefix: str, passphrase: bytes, iterations: int) -> None:
+    jar = mask_udfs_jar()  # raises, naming the missing compiler, without javac
+    mask_udfs = spark._jvm.sparkgraft.MaskUdfs
+    if not isinstance(mask_udfs, JavaClass):
+        raise MaskDataCodecError(
+            f"{jar} is not on this session's classpath: start the session with get_spark"
+        )
+    mask_udfs.register(spark._jsparkSession, prefix, bytearray(passphrase), iterations)
+
+
 def register_udfs(
     spark: SparkSession,
     codec: Codec | None = None,
     passphrase: bytes | None = None,
     prefix: str = "",
 ) -> Codec:
-    """Register the six reference mask functions on this session
-    (reference registration: MaskDataPlugin.scala:60-65).
+    """Register the six reference mask functions and ``mask_credit_card`` on
+    this session (reference registration: MaskDataPlugin.scala:60-65).
 
     ``prefix`` registers the family under alternate names (e.g.
     ``pbkdf2_mask_string``) so one session can carry several codec bindings
     side by side — re-registering the canonical names would race against
-    lazily-evaluated plans built under the previous binding."""
+    lazily-evaluated plans built under the previous binding.
+
+    Under the ``HmacSHA512`` codec the functions are JVM UDFs
+    (``MaskUdfs.java``, on the classpath of every ``get_spark`` session) with
+    per-row parameters; under every other codec they are the pandas UDFs
+    below, which take literal parameters only."""
     codec = codec or get_codec()
     passphrase = passphrase or get_passphrase()
+    if type(codec) is HmacSHA512:
+        _register_jvm_udfs(spark, prefix, passphrase, codec.stretch_iterations)
+        return codec
 
     def _mask_string_batch(length, alphabet, fmt, deterministic, values: pd.Series):
         kernel = partial(_mask_strings, codec, passphrase, length, alphabet, fmt, deterministic)

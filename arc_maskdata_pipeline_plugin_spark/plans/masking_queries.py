@@ -9,8 +9,9 @@ The callables register the mask UDFs with the fast ``HmacSHA512`` codec and a
 fixed passphrase: the driver environment carries no masking env vars, and the
 bench at sf0.1 masks ~150k customer rows — per-row PBKDF2 at reference cost
 would be a multi-minute benchmark artifact, which is exactly the problem the
-HmacSHA512 codec exists to solve: one KDF stretch per Python worker process,
-held in a bounded process-wide cache that is never pickled.
+HmacSHA512 codec exists to solve: one KDF stretch per JVM, after which each
+row costs one HMAC inside a JVM UDF (no Python worker). The passphrase is
+passed in at registration; the stretched key is never serialized with a UDF.
 """
 
 from __future__ import annotations

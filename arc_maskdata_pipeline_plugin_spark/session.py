@@ -13,13 +13,72 @@ parquet, while remaining correct on ``local[N]``:
   date/timestamp masking (reference: src/test/.../MaskDataTransformSuite.scala:44).
 * 128 MB parquet split size — the Spark default; kept explicit because the
   bench harness may override it per scale factor.
+* The mask-UDF jar on ``spark.jars`` — the ``HmacSHA512`` mask functions run
+  as JVM UDFs compiled from ``functions/MaskUdfs.java``. The jar is built
+  with the machine's ``javac`` against ``pyspark/jars/*`` on the first
+  ``get_spark`` per machine and cached under
+  ``${XDG_CACHE_HOME:-~/.cache}/spark-graft/``, keyed by the source and the
+  PySpark version. Without ``javac`` the session still starts; only
+  registering the ``HmacSHA512`` mask functions fails.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
+import shutil
+import subprocess
+import tempfile
+import zipfile
+from pathlib import Path
 
+import pyspark
 from pyspark.sql import SparkSession
+
+from .codecs import MaskDataCodecError
+
+MASK_UDFS_SOURCE = Path(__file__).parent / "functions" / "MaskUdfs.java"
+
+
+def mask_udfs_jar_path() -> Path:
+    """Where the jar compiled from ``MASK_UDFS_SOURCE`` is cached."""
+    key = hashlib.sha256(MASK_UDFS_SOURCE.read_bytes() + pyspark.__version__.encode())
+    cache = Path(os.environ.get("XDG_CACHE_HOME") or Path.home() / ".cache")
+    return cache / "spark-graft" / f"mask-udfs-{key.hexdigest()[:16]}.jar"
+
+
+def mask_udfs_jar() -> str:
+    """The mask-UDF jar, compiled once per machine; raises
+    ``MaskDataCodecError`` when it cannot be built."""
+    jar = mask_udfs_jar_path()
+    if jar.exists():
+        return str(jar)
+    javac = shutil.which("javac")
+    if javac is None:
+        raise MaskDataCodecError(
+            "the HmacSHA512 mask functions run as JVM UDFs compiled from "
+            f"{MASK_UDFS_SOURCE.name}, which needs a Java compiler: no 'javac' on PATH"
+        )
+    classpath = os.path.join(os.path.dirname(pyspark.__file__), "jars", "*")
+    try:
+        jar.parent.mkdir(parents=True, exist_ok=True)
+        with tempfile.TemporaryDirectory(dir=jar.parent) as tmp:
+            classes = Path(tmp, "classes")
+            subprocess.run(
+                [javac, "--release", "17", "-nowarn", "-d", str(classes),
+                 "-cp", classpath, str(MASK_UDFS_SOURCE)],
+                check=True, capture_output=True, text=True,
+            )
+            part = Path(tmp, jar.name)
+            with zipfile.ZipFile(part, "w") as z:
+                for cls in sorted(classes.rglob("*.class")):
+                    z.write(cls, cls.relative_to(classes).as_posix())
+            os.replace(part, jar)  # concurrent builders each land a whole jar
+    except subprocess.CalledProcessError as e:
+        raise MaskDataCodecError(f"javac failed on {MASK_UDFS_SOURCE}:\n{e.stderr}") from e
+    except OSError as e:
+        raise MaskDataCodecError(f"cannot build the mask-UDF jar at {jar}: {e}") from e
+    return str(jar)
 
 
 def get_spark(
@@ -99,7 +158,14 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", os.environ.get("SPARK_UI_ENABLED", "false"))
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    try:
+        jar = mask_udfs_jar()
+    except MaskDataCodecError:
+        pass  # register_udfs raises it when the HmacSHA512 functions are asked for
+    else:
+        conf["spark.jars"] = ",".join(j for j in (conf.get("spark.jars"), jar) if j)
+    for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
 

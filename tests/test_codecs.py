@@ -129,23 +129,6 @@ def test_hmac_codec_pickles_without_key_cache():
         assert clone.hash("warm", True, PASSPHRASE) == warm, name
 
 
-def test_hmac_hash_batch_equals_hash():
-    """The batch override splits the passphrase once and copies a cached keyed
-    HMAC; its bytes equal ``hash`` for every value, in order, duplicates and
-    non-ASCII included, also when the pepper half has bytes >= 0x80 (one
-    latin-1 char each, two UTF-8 bytes)."""
-    codec = HmacSHA512()
-    values = ["", "important", "important", "é", "日本語", "𐍈 astral", "a\x00b", "x" * 300]
-    high_pepper = bytes(range(0x80, 0xA0)) + PASSPHRASE[32:]
-    for passphrase in (PASSPHRASE, high_pepper):
-        want = [codec.hash(v, True, passphrase) for v in values]
-        assert codec.hash_batch(values, True, passphrase) == want
-        assert codec.hash_batch([], True, passphrase) == []
-    random = codec.hash_batch(["v", "v"], False, PASSPHRASE)
-    assert len(random) == 2 and random[0] != random[1]
-    assert all(len(d) == 64 for d in random)
-
-
 def test_hmac_stretches_once_per_salt_and_iterations(monkeypatch):
     """Fresh instances and pickle round-trips share one stretch per
     (salt, iterations) in a process; each pair gets its own key."""

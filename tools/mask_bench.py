@@ -51,7 +51,8 @@ def main():
         "# MASK_THROUGHPUT — rows/s per codec (reference TEST cost params)",
         "",
         f"`mask_string(16, true, c_name)` over {n} rows of `{sf_dir}/customer`,",
-        f"local[{cores}], Arrow pandas UDFs. Reference cost params from build.sbt:21-30;",
+        f"local[{cores}]: a JVM UDF under HmacSHA512, Arrow pandas UDFs under the",
+        "other codecs. Reference cost params from build.sbt:21-30;",
         "production Argon2id defaults are ~4x the test cost.",
         "",
         "| codec | params | elapsed s | rows/s |",
@@ -144,9 +145,9 @@ def main():
             f"Reversible tier: mask_fpe_encrypt (10-round HMAC Feistel) over "
             f"{bn:,} rows: {el:.2f} s = **{bn / el:,.0f} rows/s** "
             f"(≈{bn / el / cores:,.0f} rows/s/core). 10 HMACs/value vs 1; "
-            f"measured cost is {el / hmac_el:.1f}× the HMAC mask's, which makes "
-            "one batched codec call per Arrow batch of distinct values while "
-            "the Feistel rounds run per value. The FPE pattern encrypts the "
+            f"measured cost is {el / hmac_el:.1f}× the HMAC mask's, which runs "
+            "in the JVM while the Feistel rounds run per value in a Python "
+            "worker. The FPE pattern encrypts the "
             "key DICTIONARY, not the fact table, so the multiplier amortizes "
             "away.",
         ]
