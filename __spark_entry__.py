@@ -101,7 +101,9 @@ GATE_WINDOW = [
     # masking representatives q_mask_credit_cards and q_fake_substitution);
     # then (a) the twelve queries whose plans changed when
     # plans/twophase.global_cumsums swapped its lambda bucket expression for
-    # a CASE chain (same results, new plan strings); (b) the queries whose
+    # a CASE chain, and again when its per-bucket sum(...) columns took the
+    # order `sums` lists them in instead of a PYTHONHASHSEED-dependent set
+    # order (same results, new plan strings); (b) the queries whose
     # plans changed in round 13's optimization batches (HITS
     # window-normalized recurrence; label-propagation lazy chain; doc-local
     # winnowing family; fused-exchange item co-occurrence; top-k
@@ -116,7 +118,8 @@ GATE_WINDOW = [
     # --- plans changed when the HmacSHA512 mask functions became JVM
     #     UDFs (ScalaUDF in place of ArrowEvalPython) ---
     "q_mask_customers", "q_mask_order_dates",
-    # --- plans changed by the global_cumsums bucket expression ---
+    # --- plans changed by the global_cumsums bucket expression and
+    #     sum(...) column order ---
     "q_winsorize_prices", "q_winsorize_prices_approx",
     "q_quantile_normalize", "q_perplexity_filter",
     "q_curriculum_shards", "q_ks_test", "q_mann_whitney",

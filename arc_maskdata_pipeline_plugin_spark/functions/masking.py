@@ -213,12 +213,12 @@ def luhn_check_digit(digits: str) -> str:
 
 
 def luhn_valid(number: str) -> bool:
-    digits = "".join(c for c in number if c.isdigit())
+    digits = "".join(c for c in number if c.isdecimal())
     return luhn_check_digit(digits[:-1]) == digits[-1]
 
 
 def _card_digits(value: str, algorithm: str) -> str:
-    digits = "".join(c for c in value if c.isdigit())
+    digits = "".join(c for c in value if c.isdecimal())
     if len(digits) < 8:
         raise ValueError(
             f"'{algorithm}' mask_credit_card requires >= 8 digits, got {len(digits)}"
@@ -233,7 +233,7 @@ def _card_layout(value: str, digits: str, digest: bytes, algorithm: str) -> str:
     body = digits[:6] + truncate_string(encoded, len(digits) - 7, algorithm)
     card = body + luhn_check_digit(body)
     it = iter(card)
-    return "".join(next(it) if c.isdigit() else c for c in value)
+    return "".join(next(it) if c.isdecimal() else c for c in value)
 
 
 def mask_credit_card_value(

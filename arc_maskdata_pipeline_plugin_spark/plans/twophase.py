@@ -216,8 +216,10 @@ def global_cumsums(
         *([F.row_number().over(w).alias("_tp_lr")] if rank_out else []),
     )
     # Per-bucket totals: ≤ `n`+1 rows (config-bounded); the only
-    # unpartitioned window below runs over this tiny frame.
-    srcs = {src for src, _ in sums.values()}
+    # unpartitioned window below runs over this tiny frame. The sources
+    # keep `sums`' order (a set would order the sum(...) columns by
+    # PYTHONHASHSEED, and the plan string with them).
+    srcs = list(dict.fromkeys(src for src, _ in sums.values()))
     tots = b.groupBy("_tp_b").agg(
         *[F.sum(src).alias(f"_tp_t_{src}") for src in srcs],
         F.count(F.lit(1)).alias("_tp_nrows_t"),

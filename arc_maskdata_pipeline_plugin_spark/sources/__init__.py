@@ -1,28 +1,5 @@
-"""Source/sink stages (re-exported from ``operators``).
+"""Custom connectors on Spark 4's Python DataSource API (``pydatasource``).
 
-The extract/load implementations live beside the other pipeline stages in
-``operators.extract`` / ``operators.load``; this package exposes them under
-the layout documented in the README so ``from …sources import
-DelimitedExtract`` works as advertised.
+The extract/load stages live with the other pipeline stages in
+``operators.extract`` / ``operators.load``; import them from ``operators``.
 """
-
-from ..operators.extract import (  # noqa: F401
-    AvroExtract,
-    BinaryFileExtract,
-    DelimitedExtract,
-    JDBCExtract,
-    JSONExtract,
-    ORCExtract,
-    ParquetExtract,
-    TextExtract,
-    XMLExtract,
-)
-from ..operators.load import (  # noqa: F401
-    CompactParquet,
-    DelimitedLoad,
-    JSONLoad,
-    ORCLoad,
-    ParquetLoad,
-    TextLoad,
-    XMLLoad,
-)

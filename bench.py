@@ -18,6 +18,7 @@ from arc_maskdata_pipeline_plugin_spark import get_spark  # noqa: E402
 from arc_maskdata_pipeline_plugin_spark.cache import (  # noqa: E402
     release_persisted,
 )
+from tools.plan_shas import plan_sha  # noqa: E402
 
 # Headline set: one per operator family; masking/dedup join as implemented.
 HEADLINE = [
@@ -482,186 +483,6 @@ def _median(xs: list[float]) -> float:
     return s[mid] if len(s) % 2 else (s[mid - 1] + s[mid]) / 2
 
 
-def _split_toplevel(inner: str) -> list:
-    """Split a rendered expression list on top-level commas only."""
-    parts, depth, cur = [], 0, []
-    for ch in inner:
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        if ch == "," and depth == 0:
-            parts.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-    parts.append("".join(cur).strip())
-    return parts
-
-
-def _group_end(s: str, start: int) -> int:
-    """Index one past the close of the bracket/paren group opening at start."""
-    depth, j = 1, start + 1
-    while j < len(s) and depth:
-        if s[j] in "([":
-            depth += 1
-        elif s[j] in ")]":
-            depth -= 1
-        j += 1
-    return j
-
-
-def _canon_group(s: str, start: int, open_ch: str, expand: bool, gid_idx=None) -> tuple:
-    """Canonicalize one bracket/paren group starting at ``start`` (index of
-    the opening char): sort top-level items; in Expand projection lists,
-    ONLY the gid slot (position ``gid_idx``, located from the gid#x column
-    in the node's output-attr list) is rewritten to 'n' — a genuine integer
-    literal elsewhere in a branch stays visible to the plan diff
-    (ADVICE r07 #3)."""
-    close_ch = "]" if open_ch == "[" else ")"
-    j = _group_end(s, start)
-    items = _split_toplevel(s[start + 1 : j - 1])
-    if expand:
-        # slot positions inside a projection sublist track the (permuted)
-        # Expand output-attr order — sort within the sublist too, so the
-        # canonical form is the SET of emitted expressions per branch
-        def _sub(it):
-            parts = [p.strip() for p in _split_toplevel(it[1:-1])]
-            if gid_idx is not None and gid_idx < len(parts) and parts[gid_idx].isdigit():
-                parts[gid_idx] = "n"
-            return "[" + ", ".join(sorted(parts)) + "]"
-
-        items = [
-            _sub(it) if it.startswith("[") and it.endswith("]") else it
-            for it in items
-        ]
-    return open_ch + ", ".join(sorted(items)) + close_ch, j
-
-
-def _canon_distinct_rewrite(s: str) -> str:
-    """RewriteDistinctAggregates assigns Expand gid numbers and orders the
-    expanded grouping keys from exprId-keyed set iteration — the SAME query
-    planned at a different session position renders a permuted (but
-    semantically identical) plan string, which broke sha stability for
-    every multi-countDistinct query (q_boilerplate_segments,
-    q_schema_drift_audit, q_kmv_distinct_merge — VERDICT r06 wrong-item
-    #1). Canonicalize: gid literals → 'n'; sort top-level items of
-    keys=[...] / output=[...] / hashpartitioning(...) groups; on Expand
-    lines, also canonicalize the projection sublists (bare-int gid slots →
-    'n') and sort them."""
-    import re
-
-    s = re.sub(r"\(gid#x = \d+\)", "(gid#x = n)", s)
-    out_lines = []
-    for line in s.split("\n"):
-        for marker in ("keys=[", "output=[", "hashpartitioning("):
-            pos = 0
-            while True:
-                idx = line.find(marker, pos)
-                if idx < 0:
-                    break
-                grp, end = _canon_group(
-                    line, idx + len(marker) - 1, marker[-1], expand=False
-                )
-                line = line[: idx + len(marker) - 1] + grp + line[end:]
-                pos = idx + len(marker)
-        if "Expand [" in line:
-            pos = 0
-            while True:
-                idx = line.find("Expand [", pos)
-                if idx < 0:
-                    break
-                # locate the gid slot from the output-attr list FIRST so the
-                # projection rewrite touches only that position
-                proj_end = _group_end(line, idx + 7)
-                gid_idx = None
-                if line[proj_end:].startswith(", ["):
-                    out_end = _group_end(line, proj_end + 2)
-                    out_items = _split_toplevel(line[proj_end + 3 : out_end - 1])
-                    for i, attr in enumerate(out_items):
-                        if re.match(r"(gid|spark_grouping_id)#", attr.strip()):
-                            gid_idx = i
-                            break
-                grp, end = _canon_group(line, idx + 7, "[", expand=True, gid_idx=gid_idx)
-                rest = line[end:]
-                # the trailing ", [output attrs]" list of the Expand node
-                if rest.startswith(", ["):
-                    grp2, end2 = _canon_group(rest, 2, "[", expand=False)
-                    rest = ", " + grp2 + rest[end2:]
-                line = line[: idx + 7] + grp + rest
-                pos = idx + 8
-        out_lines.append(line)
-    return "\n".join(out_lines)
-
-
-def _plan_normalized(df) -> str:
-    """Normalized executed-plan string: expression ids, AQE plan ids, and
-    codegen/exchange ids are session-specific noise and get normalized out,
-    so the SAME plan stringifies identically across rounds and a >1.3x
-    bench flag can be auto-adjudicated as plan-changed vs environmental
-    (VERDICT r05 next-round #3).
-
-    FileScan metadata (PushedFilters etc.) truncates at
-    spark.sql.maxMetadataStringLength CHARS, so exprId digit-width would
-    shift the cut point and leak session position into the hash — lift the
-    limit while printing."""
-    import re
-
-    sess = df.sparkSession
-    prev = sess.conf.get("spark.sql.maxMetadataStringLength", "100")
-    sess.conf.set("spark.sql.maxMetadataStringLength", "100000")
-    try:
-        s = df._jdf.queryExecution().executedPlan().toString()
-    finally:
-        sess.conf.set("spark.sql.maxMetadataStringLength", prev)
-    s = re.sub(r"#\d+", "#x", s)
-    s = re.sub(r"\[id=[^\]]*\]", "", s)
-    s = re.sub(r"plan_id=\d+", "plan_id=x", s)
-    s = re.sub(r"Statistics\([^)]*\)", "", s)
-    s = re.sub(r"isFinalPlan=\w+", "", s)
-    # AQE materializes query stages in TIMING-dependent order, so stage ids
-    # and whole-stage-codegen ids permute run-to-run inside a cached
-    # frame's finalized plan (q_dedup_evidence_clusters at sf0.1)
-    s = re.sub(r"\b(Shuffle|Broadcast|TableCache|Result)QueryStage \d+", r"\1QueryStage n", s)
-    s = re.sub(r"\*\(\d+\)", "*(n)", s)
-    # localCheckpoint leaves print as `Scan ExistingRDD MapPartitionsRDD[NNN]
-    # at <action> at <callsite>` — the RDD id (and the Python callsite line)
-    # are session-monotonic noise, so the queries whose captured plan IS the
-    # post-checkpoint scan (pagerank/PPR) were sha-unstable and their
-    # regression flags unadjudicable (ADVICE r12 #2)
-    s = re.sub(r"MapPartitionsRDD\[\d+\]", "MapPartitionsRDD[n]", s)
-    s = re.sub(r"\bat \w+ at \S+:\d+", "at action at callsite", s)
-    # higher-order-function lambda variables (x_3, y_7, ...) carry
-    # session-monotonic suffixes — normalize the name, keep the shape
-    s = re.sub(r"\b([a-z]+)_\d+#x", r"\1_n#x", s)
-    # IN-list literals built from a Python set splat in hash-randomized
-    # order (same code, different interpreter run → different string —
-    # VERDICT r06 wrong-item #1, q_rake_keywords); fingerprint the SET,
-    # not the arrival order
-    s = re.sub(
-        r"\bIN \(([^()]+)\)",
-        lambda m: "IN (" + ",".join(sorted(m.group(1).split(","))) + ")",
-        s,
-    )
-    return _canon_distinct_rewrite(s)
-
-
-def _plan_sha(df) -> str:
-    """Stable fingerprint of the executed physical plan (see
-    ``_plan_normalized``). Set ``SPARK_GRAFT_DUMP_PLANS=<path>`` to also
-    append the normalized strings (keyed by sha) for instability diffing."""
-    import hashlib
-    import json as _json
-
-    s = _plan_normalized(df)
-    sha = hashlib.sha256(s.encode()).hexdigest()[:16]
-    dump = os.environ.get("SPARK_GRAFT_DUMP_PLANS")
-    if dump:
-        with open(dump, "a") as f:
-            f.write(_json.dumps({"sha": sha, "plan": s}) + "\n")
-    return sha
-
-
 def _previous_round_queries() -> tuple[str, dict]:
     """Per-query timings from the latest BENCH_r{N}.json, for regression
     tracking (VERDICT r01 next-round #8)."""
@@ -787,7 +608,7 @@ def main():
         # taken after the warm runs would spuriously adjudicate
         # "plan-changed" against a fresh-build baseline.
         try:
-            plan_shas[name] = _plan_sha(qs[name](spark, sf_dir))
+            plan_shas[name] = plan_sha(qs[name](spark, sf_dir))
         except Exception:
             pass
         # building a TRAINER query's plan runs the training loop (driver
@@ -866,69 +687,12 @@ def main():
     # Auto-adjudicate each flag (VERDICT r05 next-round #3): a flag whose
     # normalized physical-plan fingerprint is byte-identical to the previous
     # round's snapshot is environmental noise, not a plan regression.
-    # Plan changes SHIPPED deliberately this round, so the adjudication
-    # distinguishes an intended rewrite from an accidental regression.
-    intended = {
-        # r11: global_rank now persists `base` — the q_bloom_skip_audit
-        # correctness fix (VERDICT r10 #1); rank consumers pick up an
-        # InMemoryRelation in place of the duplicated range shuffle
-        "q_batch_leakage_audit": "global_rank base persist (VERDICT r10 #1)",
-        "q_bloom_skip_audit": "global_rank base persist (VERDICT r10 #1)",
-        # r11: encode applies the session artifact memo instead of
-        # retraining (VERDICT r10 #5); train/roundtrip read the memo too
-        "q_unigram_train_vocab": "session artifact memo (VERDICT r10 #5)",
-        "q_unigram_encode": "applies artifact, no retrain (VERDICT r10 #5)",
-        "q_unigram_artifact_roundtrip": "session artifact memo (VERDICT r10 #5)",
-        # r11 ADVICE fixes that alter the plan/UDF body
-        "q_join_order_advisor": "decimal(38,0) estimate (ADVICE r10 #4)",
-        "q_mask_ff1_referential": "NULL-tweak propagation (ADVICE r10 #2)",
-        "q_stream_dedup_winnow": "staging cleanup + localCheckpoint (ADVICE r10 #3)",
-        # r11 close: daily/pairs persisted after the first BENCH_DETAIL
-        # snapshot of the round (>1-consumer rule) — the r11 detail carries
-        # the pre-persist shas for these two new queries
-        "q_mann_kendall_trend": "daily+pairs persist (r11 close)",
-        "q_seasonal_mann_kendall": "daily persist (r11 close)",
-        # carried from r10 (VERDICT r10 #7): two-phase conversions vs any
-        # older baseline sha that predates them
-        "q_ks_test": "two-phase cumsum (VERDICT r09 #1)",
-        "q_mann_whitney": "two-phase cumsum (VERDICT r09 #1)",
-        "q_kruskal_wallis": "two-phase cumsum (VERDICT r09 #1)",
-        "q_winsorize_prices": "two-phase cumsum (VERDICT r09 #1)",
-        "q_winsorize_prices_approx": "two-phase cumsum (exact ref path)",
-        "q_quantile_normalize": "two-phase cumsum (VERDICT r09 #1)",
-        "q_negative_sampling_table": "two-phase cumsum (VERDICT r09 #1)",
-        "q_partition_balance_planner": "two-phase cumsum (VERDICT r09 #1)",
-        "q_selectivity_estimate": "two-phase cumsum (VERDICT r09 #1)",
-        "q_perplexity_filter": "shared quantile_thresholds seam (two-phase)",
-        # r12: Fellegi-Sunter blocking reworked — compound (nation,
-        # name-tens-digit) key + per-block cap + dropped audit
-        "q_fellegi_sunter_linkage": "compound capped blocking (VERDICT r11 #1)",
-        # r12: BPE/WordPiece session train memos — warm runs REPLAY the
-        # merge list as a chained replace projection instead of retraining
-        # (VERDICT r11 #2); every consumer of the trained frame picks up
-        # the replay plan when another tokenizer query trained first
-        "q_wordpiece_encode": "train memo replay + shrinking-active DP checkpoints (r12)",
-        "q_tokenizer_shootout": "train memo replay + shrinking-active DP checkpoints (r12)",
-        "q_wordpiece_train_merges": "train memo replay (VERDICT r11 #2)",
-        "q_bpe_train_merges": "train memo replay (VERDICT r11 #2)",
-        "q_bpe_encode": "train memo replay (VERDICT r11 #2)",
-        "q_bpe_fertility": "train memo replay (VERDICT r11 #2)",
-        "q_bpe_roundtrip": "train memo replay (VERDICT r11 #2)",
-        "q_bpe_byte_train": "train memo replay (VERDICT r11 #2)",
-        "q_bpe_byte_encode": "train memo replay (VERDICT r11 #2)",
-        "q_bpe_vocab_sweep": "train memo replay (VERDICT r11 #2)",
-        "q_bpe_artifact_roundtrip": "train memo replay (VERDICT r11 #2)",
-        # r12: radix-26 FF3 rendering widened 5 -> 6 chars (ADVICE r11 #4)
-        "q_mask_ff3_referential": "radix-26 width 5->6 (ADVICE r11 #4)",
-    }
     adjudication = {}
     for name in regressions:
         prev_sha, cur_sha = baseline_shas.get(name), plan_shas.get(name)
         if prev_sha and cur_sha:
             if prev_sha == cur_sha:
                 adjudication[name] = "environment (plan unchanged)"
-            elif name in intended:
-                adjudication[name] = f"plan-changed (intended: {intended[name]})"
             else:
                 adjudication[name] = "plan-changed"
         else:

@@ -65,7 +65,7 @@ def test_query_persists_are_tracked_and_releasable(spark, tmp_path):
 
 
 def test_plan_sha_is_session_position_independent(spark):
-    """bench._plan_sha must hash the SAME plan identically whether the
+    """plan_sha must hash the SAME plan identically whether the
     session is fresh or has run other queries first — exprId digit-width
     interacting with FileScan's metadata truncation once leaked session
     position into the fingerprint and spuriously adjudicated unchanged
@@ -75,17 +75,17 @@ def test_plan_sha_is_session_position_independent(spark):
 
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entry
-    from bench import _plan_sha
+    from tools.plan_shas import plan_sha
 
     qs = entry.queries()
     sf = "/root/testdata/sf0.001"
-    before = _plan_sha(qs["q3_shipping_priority"](spark, sf))
+    before = plan_sha(qs["q3_shipping_priority"](spark, sf))
     qs["q1_pricing_summary"](spark, sf).count()  # burn exprIds
-    after = _plan_sha(qs["q3_shipping_priority"](spark, sf))
+    after = plan_sha(qs["q3_shipping_priority"](spark, sf))
     assert before == after
     # higher-order-function lambdas carry session-monotonic variable
     # suffixes (x_3 -> x_7); shingle-heavy queries must normalize too
-    b2 = _plan_sha(qs["dedup_jaccard_pairs"](spark, sf))
+    b2 = plan_sha(qs["dedup_jaccard_pairs"](spark, sf))
     qs["q_word_counts"](spark, sf).count()  # burn more ids
-    a2 = _plan_sha(qs["dedup_jaccard_pairs"](spark, sf))
+    a2 = plan_sha(qs["dedup_jaccard_pairs"](spark, sf))
     assert b2 == a2

@@ -16,7 +16,7 @@ from typing import NamedTuple
 
 import pandas as pd
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -295,6 +295,14 @@ def test_mask_date_and_timestamp_udfs_match_per_value(jvm, codec, dates, stamps,
             st.sampled_from(["", "-", " "]),
         )
     ),
+)
+# Python and the JVM agree on what a card digit is (Unicode Nd): '²' is a
+# separator, in the layout or inside the BIN; '٣' (ARABIC-INDIC THREE) is a digit
+@example(unscaled=[1], scale=0, range_=Decimal("1.0"), cards=["4111 1111 1111 11²1"])
+@example(unscaled=[1], scale=0, range_=Decimal("1.0"), cards=["41²11 1111 1111 1111"])
+@example(
+    unscaled=[1], scale=0, range_=Decimal("1.0"),
+    cards=["٣111 1111 1111 1111", "4111-٣111-1111-111٣"],
 )
 def test_mask_decimal_and_card_udfs_match_per_value(jvm, codec, unscaled, scale, range_, cards):
     # a Spark DecimalType column hands over one scale for every value

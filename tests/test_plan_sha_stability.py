@@ -1,15 +1,13 @@
 """Plan-fingerprint stability across session positions.
 
-VERDICT r06 wrong-item #1: the SAME query planned at a different session
-position rendered a permuted plan string — RewriteDistinctAggregates
-assigns Expand gid numbers and orders the expanded grouping keys from
-exprId-keyed set iteration, and exprIds depend on how many expressions the
-session allocated before the query. The fixtures are two REAL captures of
-the same queries (bench-order vs isolated session) that hashed differently
-before the canonicalization; they must canonicalize byte-identically now.
-
-Also locks tools/plan_shas.py's duplicated normalizer to bench's — the
-backfill tool must stay byte-identical or cross-round adjudication drifts.
+The SAME query planned at a different session position once rendered a
+permuted plan string — RewriteDistinctAggregates assigns Expand gid numbers
+and orders the expanded grouping keys from exprId-keyed set iteration, and
+exprIds depend on how many expressions the session allocated before the
+query. The fixtures are two REAL captures of the same queries (bench-order
+vs isolated session) that hashed differently before the canonicalization;
+they must canonicalize byte-identically now. Every test calls the one
+normalizer, ``tools/plan_shas.py``, which ``bench.py`` imports.
 """
 
 from __future__ import annotations
@@ -17,8 +15,7 @@ from __future__ import annotations
 import json
 import os
 
-import bench
-from tools import plan_shas
+from tools.plan_shas import _canon_distinct_rewrite, normalize_plan_string
 
 FIXTURES = os.path.join(os.path.dirname(__file__), "fixtures", "distinct_rewrite_plans.json")
 
@@ -31,63 +28,47 @@ def _load():
 def test_session_permuted_captures_canonicalize_identically():
     d = _load()
     for q in ("kmv", "boiler"):
-        ca = bench._canon_distinct_rewrite(d[f"{q}_pos_a"])
-        cb = bench._canon_distinct_rewrite(d[f"{q}_pos_b"])
+        ca = _canon_distinct_rewrite(d[f"{q}_pos_a"])
+        cb = _canon_distinct_rewrite(d[f"{q}_pos_b"])
         assert ca == cb, f"{q}: canonical forms differ"
         # and they genuinely differed pre-canonicalization (fixture sanity)
         assert d[f"{q}_pos_a"] != d[f"{q}_pos_b"]
 
 
-def test_tools_normalizer_matches_bench():
-    d = _load()
-    for s in d.values():
-        assert plan_shas._canon_distinct_rewrite(s) == bench._canon_distinct_rewrite(s)
-
-
 def test_gid_literal_and_in_list_normalization():
     s = "HashAggregate(keys=[b#x, a#x], functions=[count(x#x) FILTER (WHERE (gid#x = 2))])"
     t = "HashAggregate(keys=[a#x, b#x], functions=[count(x#x) FILTER (WHERE (gid#x = 1))])"
-    assert bench._canon_distinct_rewrite(s) == bench._canon_distinct_rewrite(t)
-    # IN-list sets hash identically regardless of splat order (bench-level)
-    import re
-
-    def insort(x):
-        return re.sub(
-            r"\bIN \(([^()]+)\)",
-            lambda m: "IN (" + ",".join(sorted(m.group(1).split(","))) + ")",
-            x,
-        )
-
-    assert insort("Filter tok#x IN (b,a,c)") == insort("Filter tok#x IN (c,a,b)")
+    assert _canon_distinct_rewrite(s) == _canon_distinct_rewrite(t)
+    # IN-list sets hash identically regardless of splat order
+    a = normalize_plan_string("Filter tok#12 IN (b,a,c)")
+    assert a == normalize_plan_string("Filter tok#7 IN (c,a,b)")
+    assert a != normalize_plan_string("Filter tok#7 IN (c,a,d)")
 
 
 def test_expand_sublists_canonical_independent_of_slot_order():
     a = "+- Expand [[user_id#xL, null, 1], [null, day#x, 2]], [user_id#xL, day#x, gid#x]"
     b = "+- Expand [[day#x, null, 1], [null, user_id#xL, 2]], [day#x, user_id#xL, gid#x]"
-    assert bench._canon_distinct_rewrite(a) == bench._canon_distinct_rewrite(b)
+    assert _canon_distinct_rewrite(a) == _canon_distinct_rewrite(b)
     # different expression SETS must still differ
     c = "+- Expand [[other#x, null, 1], [null, day#x, 2]], [other#x, day#x, gid#x]"
-    assert bench._canon_distinct_rewrite(a) != bench._canon_distinct_rewrite(c)
+    assert _canon_distinct_rewrite(a) != _canon_distinct_rewrite(c)
 
 
 def test_non_gid_integer_literals_stay_visible_in_expand():
-    """ADVICE r07 #3: only the gid SLOT (located from the gid#x /
-    spark_grouping_id#x column of the output-attr list) is rewritten to
-    'n'; a genuine integer literal elsewhere in an Expand branch must
-    survive canonicalization so a changed constant still reads as a plan
-    change in the >1.3x adjudication."""
+    """Only the gid SLOT (located from the gid#x / spark_grouping_id#x
+    column of the output-attr list) is rewritten to 'n'; a genuine integer
+    literal elsewhere in an Expand branch must survive canonicalization so
+    a changed constant still reads as a plan change in the >1.3x
+    adjudication."""
     a = "+- Expand [[user_id#xL, 7, 1], [null, 7, 2]], [user_id#xL, lit#x, gid#x]"
     b = "+- Expand [[user_id#xL, 9, 1], [null, 9, 2]], [user_id#xL, lit#x, gid#x]"
-    ca, cb = bench._canon_distinct_rewrite(a), bench._canon_distinct_rewrite(b)
+    ca, cb = _canon_distinct_rewrite(a), _canon_distinct_rewrite(b)
     assert ca != cb  # changed constant is a REAL plan change
     assert "7" in ca and "9" in cb
     # while the gid slot itself still canonicalizes away
     g1 = "+- Expand [[user_id#xL, 7, 1]], [user_id#xL, lit#x, gid#x]"
     g2 = "+- Expand [[user_id#xL, 7, 2]], [user_id#xL, lit#x, gid#x]"
-    assert bench._canon_distinct_rewrite(g1) == bench._canon_distinct_rewrite(g2)
-    # tools mirror agrees
-    for s in (a, b, g1, g2):
-        assert plan_shas._canon_distinct_rewrite(s) == bench._canon_distinct_rewrite(s)
+    assert _canon_distinct_rewrite(g1) == _canon_distinct_rewrite(g2)
 
 
 def test_aqe_stage_and_codegen_ids_normalized():
@@ -96,22 +77,22 @@ def test_aqe_stage_and_codegen_ids_normalized():
     runs inside a cached frame's finalized plan (q_dedup_evidence_clusters
     — the one residual flip after the distinct-rewrite fix). The fixture
     pairs are REAL differing lines from the two captures; each pair must
-    normalize identically under bench AND the tools mirror."""
-    import re
-
+    normalize identically."""
     p = os.path.join(os.path.dirname(__file__), "fixtures", "aqe_stage_noise_plans.json")
     with open(p) as f:
         pairs = json.load(f)["line_pairs"]
     assert pairs, "fixture must carry at least one differing line pair"
-
-    def norm(s):
-        s = re.sub(r"\b(Shuffle|Broadcast|TableCache|Result)QueryStage \d+", r"\1QueryStage n", s)
-        s = re.sub(r"\*\(\d+\)", "*(n)", s)
-        return s
-
     for x, y in pairs:
         assert x != y  # fixture sanity: they really differed raw
-        assert norm(x) == norm(y), (x, y)
-    # and the full normalizers agree between bench and the backfill tool
-    blob = "\n".join(x for x, _ in pairs)
-    assert plan_shas._canon_distinct_rewrite(blob) == bench._canon_distinct_rewrite(blob)
+        assert normalize_plan_string(x) == normalize_plan_string(y), (x, y)
+
+
+def test_checkpoint_rdd_id_and_callsite_normalized():
+    """A localCheckpoint leaf prints its RDD id and the Python call site of
+    the action that built it; both are session noise."""
+    a = "Scan ExistingRDD[id#3L] MapPartitionsRDD[123] at toPandas at /x/y.py:45"
+    b = "Scan ExistingRDD[id#9L] MapPartitionsRDD[7] at count at /other/z.py:312"
+    assert normalize_plan_string(a) == normalize_plan_string(b)
+    assert normalize_plan_string(a) == (
+        "Scan ExistingRDD[id#xL] MapPartitionsRDD[n] at action at callsite"
+    )

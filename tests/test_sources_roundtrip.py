@@ -9,13 +9,13 @@ from __future__ import annotations
 
 import pytest
 
-from arc_maskdata_pipeline_plugin_spark.operators import PipelineContext
-from arc_maskdata_pipeline_plugin_spark.sources import (
+from arc_maskdata_pipeline_plugin_spark.operators import (
     BinaryFileExtract,
     JSONExtract,
     JSONLoad,
     ORCExtract,
     ORCLoad,
+    PipelineContext,
     TextExtract,
     TextLoad,
 )
@@ -96,7 +96,7 @@ def test_binary_file_extract(spark, ctx, tmp_path):
 
 def test_parquet_merge_schema(spark, ctx, tmp_path):
     """Schema drift across files: mergeSchema unions the footers."""
-    from arc_maskdata_pipeline_plugin_spark.sources import ParquetExtract
+    from arc_maskdata_pipeline_plugin_spark.operators import ParquetExtract
 
     uri = str(tmp_path / "drift")
     spark.createDataFrame([(1, "a")], "id INT, name STRING").write.parquet(uri + "/p1")
@@ -112,7 +112,7 @@ def test_parquet_merge_schema(spark, ctx, tmp_path):
 
 def test_compact_parquet(spark, ctx, tmp_path):
     """Compaction collapses a many-small-files dataset into few files."""
-    from arc_maskdata_pipeline_plugin_spark.sources import CompactParquet
+    from arc_maskdata_pipeline_plugin_spark.operators import CompactParquet
 
     src = str(tmp_path / "fragmented")
     spark.range(0, 10_000).repartition(64).write.parquet(src)
@@ -129,7 +129,7 @@ def test_compact_parquet(spark, ctx, tmp_path):
 
 
 def test_xml_roundtrip(spark, ctx, tmp_path):
-    from arc_maskdata_pipeline_plugin_spark.sources import XMLExtract, XMLLoad
+    from arc_maskdata_pipeline_plugin_spark.operators import XMLExtract, XMLLoad
 
     _frame(spark).createOrReplaceTempView("xml_in")
     uri = str(tmp_path / "xml_out")

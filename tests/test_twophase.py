@@ -135,3 +135,21 @@ def test_empty_inputs(spark):
         global_cumsums(df, ["k"], {"c": ("x", "incl")}, parts=8).count() == 0
     )
     assert global_ntile(df, ["k", "id"], 4, out="t", parts=8).count() == 0
+
+
+def test_global_cumsums_totals_follow_sums_order(spark):
+    """The per-bucket totals aggregate lists its sum(...) columns in
+    ``sums``' order: a set of sources would order them by PYTHONHASHSEED,
+    and the plan's fingerprint would differ between two processes."""
+    srcs = ["e", "b", "d", "a", "c"]
+    df = _mk(spark, n=200).select(
+        "k", *[(F.col("x") + i).alias(s) for i, s in enumerate(srcs)]
+    )
+    got = global_cumsums(
+        df, ["k"], {f"c_{s}": (s, "incl") for s in srcs}, parts=4
+    )
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    totals = [ln for ln in plan.split("\n") if "HashAggregate(keys=[_tp_b#" in ln]
+    assert totals
+    for line in totals:
+        assert re.findall(r"sum\((\w+)#", line) == srcs, line

@@ -1,14 +1,21 @@
-"""Compute normalized physical-plan fingerprints for a repo tree's headline
-queries WITHOUT benchmarking them.
+"""Normalized physical-plan fingerprints: the one implementation.
 
 Usage: python tools/plan_shas.py <repo_root> <sf_dir> [out.json]
 
-Used once to backfill `plan_shas` into a previous round's
-BENCH_DETAIL_r{N}.json snapshot (git worktree at that round's commit), so
-bench.py's >1.3x regression flags can be auto-adjudicated as `plan-changed`
-vs `environment (plan unchanged)` from the very first round the mechanism
-ships (VERDICT r05 next-round #3). The normalization here MUST stay
-byte-identical to ``bench._plan_sha``.
+``plan_normalized(df)`` renders a DataFrame's executed plan with the
+session- and timing-specific noise normalized out; ``plan_sha(df)`` is its
+16-hex-digit SHA-256. ``bench.py`` imports both to adjudicate its >1.3x
+regression flags (same sha = the plan did not change).
+
+Run as a script, the tool fingerprints every ``HEADLINE`` query of the tree
+at ``<repo_root>`` WITHOUT benchmarking it. It takes only ``HEADLINE`` (from
+that tree's ``bench.py``) and the queries (from its ``__spark_entry__``);
+the normalizer is always THIS file's, so two trees are compared under one
+normalizer. That is the before/after proof of a plan-preserving change: run
+it on the parent and on the change (same ``SPARK_GRAFT_CPUS``, which sets
+the shuffle partition count that plan strings print) and diff the JSON.
+Set ``SPARK_GRAFT_DUMP_PLANS=<path>`` to also append each normalized plan
+string, keyed by its sha, for diffing the queries that differ.
 
 Note: "planning only" still executes any O(1)-row driver probes a query
 performs during construction (BPE vocab argmax, PCA moment probe, iterative
@@ -17,11 +24,13 @@ graph rounds), so this is minutes, not seconds, at sf0.1.
 
 import hashlib
 import json
+import os
 import re
 import sys
 
 
 def _split_toplevel(inner: str) -> list:
+    """Split a rendered expression list on top-level commas only."""
     parts, depth, cur = [], 0, []
     for ch in inner:
         if ch in "([":
@@ -38,6 +47,7 @@ def _split_toplevel(inner: str) -> list:
 
 
 def _group_end(s: str, start: int) -> int:
+    """Index one past the close of the bracket/paren group opening at start."""
     depth, j = 1, start + 1
     while j < len(s) and depth:
         if s[j] in "([":
@@ -49,10 +59,18 @@ def _group_end(s: str, start: int) -> int:
 
 
 def _canon_group(s: str, start: int, open_ch: str, expand: bool, gid_idx=None) -> tuple:
+    """Canonicalize one bracket/paren group starting at ``start`` (index of
+    the opening char): sort top-level items; in Expand projection lists,
+    ONLY the gid slot (position ``gid_idx``, located from the gid#x column
+    in the node's output-attr list) is rewritten to 'n' — a genuine integer
+    literal elsewhere in a branch stays visible to the plan diff."""
     close_ch = "]" if open_ch == "[" else ")"
     j = _group_end(s, start)
     items = _split_toplevel(s[start + 1 : j - 1])
     if expand:
+        # slot positions inside a projection sublist track the (permuted)
+        # Expand output-attr order — sort within the sublist too, so the
+        # canonical form is the SET of emitted expressions per branch
         def _sub(it):
             parts = [p.strip() for p in _split_toplevel(it[1:-1])]
             if gid_idx is not None and gid_idx < len(parts) and parts[gid_idx].isdigit():
@@ -67,8 +85,15 @@ def _canon_group(s: str, start: int, open_ch: str, expand: bool, gid_idx=None) -
 
 
 def _canon_distinct_rewrite(s: str) -> str:
-    """Byte-identical to bench._canon_distinct_rewrite (locked by
-    tests/test_plan_sha_stability.py)."""
+    """RewriteDistinctAggregates assigns Expand gid numbers and orders the
+    expanded grouping keys from exprId-keyed set iteration — the SAME query
+    planned at a different session position renders a permuted (but
+    semantically identical) plan string (every multi-countDistinct query:
+    q_boilerplate_segments, q_schema_drift_audit, q_kmv_distinct_merge).
+    Canonicalize: gid literals → 'n'; sort top-level items of keys=[...] /
+    output=[...] / hashpartitioning(...) groups; on Expand lines, also
+    canonicalize the projection sublists (bare-int gid slots → 'n') and
+    sort them."""
     s = re.sub(r"\(gid#x = \d+\)", "(gid#x = n)", s)
     out_lines = []
     for line in s.split("\n"):
@@ -89,6 +114,8 @@ def _canon_distinct_rewrite(s: str) -> str:
                 idx = line.find("Expand [", pos)
                 if idx < 0:
                     break
+                # locate the gid slot from the output-attr list FIRST so the
+                # projection rewrite touches only that position
                 proj_end = _group_end(line, idx + 7)
                 gid_idx = None
                 if line[proj_end:].startswith(", ["):
@@ -100,6 +127,7 @@ def _canon_distinct_rewrite(s: str) -> str:
                             break
                 grp, end = _canon_group(line, idx + 7, "[", expand=True, gid_idx=gid_idx)
                 rest = line[end:]
+                # the trailing ", [output attrs]" list of the Expand node
                 if rest.startswith(", ["):
                     grp2, end2 = _canon_group(rest, 2, "[", expand=False)
                     rest = ", " + grp2 + rest[end2:]
@@ -109,7 +137,47 @@ def _canon_distinct_rewrite(s: str) -> str:
     return "\n".join(out_lines)
 
 
-def plan_sha(df) -> str:
+def normalize_plan_string(s: str) -> str:
+    """Normalize a rendered executed plan: expression ids, AQE plan ids, and
+    codegen/exchange ids are session-specific noise, so the SAME plan
+    stringifies identically across sessions and processes."""
+    s = re.sub(r"#\d+", "#x", s)
+    s = re.sub(r"\[id=[^\]]*\]", "", s)
+    s = re.sub(r"plan_id=\d+", "plan_id=x", s)
+    s = re.sub(r"Statistics\([^)]*\)", "", s)
+    s = re.sub(r"isFinalPlan=\w+", "", s)
+    # AQE materializes query stages in TIMING-dependent order, so stage ids
+    # and whole-stage-codegen ids permute run-to-run inside a cached
+    # frame's finalized plan (q_dedup_evidence_clusters at sf0.1)
+    s = re.sub(r"\b(Shuffle|Broadcast|TableCache|Result)QueryStage \d+", r"\1QueryStage n", s)
+    s = re.sub(r"\*\(\d+\)", "*(n)", s)
+    # localCheckpoint leaves print as `Scan ExistingRDD MapPartitionsRDD[NNN]
+    # at <action> at <callsite>` — the RDD id (and the Python callsite line)
+    # are session-monotonic noise, so the queries whose captured plan IS the
+    # post-checkpoint scan (pagerank/PPR) need both normalized
+    s = re.sub(r"MapPartitionsRDD\[\d+\]", "MapPartitionsRDD[n]", s)
+    s = re.sub(r"\bat \w+ at \S+:\d+", "at action at callsite", s)
+    # higher-order-function lambda variables (x_3, y_7, ...) carry
+    # session-monotonic suffixes — normalize the name, keep the shape
+    s = re.sub(r"\b([a-z]+)_\d+#x", r"\1_n#x", s)
+    # IN-list literals built from a Python set splat in hash-randomized
+    # order (same code, different interpreter run → different string,
+    # q_rake_keywords); fingerprint the SET, not the arrival order
+    s = re.sub(
+        r"\bIN \(([^()]+)\)",
+        lambda m: "IN (" + ",".join(sorted(m.group(1).split(","))) + ")",
+        s,
+    )
+    return _canon_distinct_rewrite(s)
+
+
+def plan_normalized(df) -> str:
+    """``df``'s executed plan, normalized (see ``normalize_plan_string``).
+
+    FileScan metadata (PushedFilters etc.) truncates at
+    spark.sql.maxMetadataStringLength CHARS, so exprId digit-width would
+    shift the cut point and leak session position into the hash — lift the
+    limit while printing."""
     sess = df.sparkSession
     prev = sess.conf.get("spark.sql.maxMetadataStringLength", "100")
     sess.conf.set("spark.sql.maxMetadataStringLength", "100000")
@@ -117,27 +185,20 @@ def plan_sha(df) -> str:
         s = df._jdf.queryExecution().executedPlan().toString()
     finally:
         sess.conf.set("spark.sql.maxMetadataStringLength", prev)
-    s = re.sub(r"#\d+", "#x", s)
-    s = re.sub(r"\[id=[^\]]*\]", "", s)
-    s = re.sub(r"plan_id=\d+", "plan_id=x", s)
-    s = re.sub(r"Statistics\([^)]*\)", "", s)
-    s = re.sub(r"isFinalPlan=\w+", "", s)
-    # AQE stage/codegen ids are timing-dependent (byte-identical to bench)
-    s = re.sub(r"\b(Shuffle|Broadcast|TableCache|Result)QueryStage \d+", r"\1QueryStage n", s)
-    s = re.sub(r"\*\(\d+\)", "*(n)", s)
-    # higher-order-function lambda variables (x_3, y_7, ...) carry
-    # session-monotonic suffixes — normalize the name, keep the shape
-    s = re.sub(r"\b([a-z]+)_\d+#x", r"\1_n#x", s)
-    # IN-list literals built from a Python set splat in hash-randomized
-    # order (VERDICT r06 wrong-item #1) — fingerprint the SET, not the
-    # arrival order (byte-identical to bench._plan_sha)
-    s = re.sub(
-        r"\bIN \(([^()]+)\)",
-        lambda m: "IN (" + ",".join(sorted(m.group(1).split(","))) + ")",
-        s,
-    )
-    s = _canon_distinct_rewrite(s)
-    return hashlib.sha256(s.encode()).hexdigest()[:16]
+    return normalize_plan_string(s)
+
+
+def plan_sha(df) -> str:
+    """Stable fingerprint of the executed physical plan (see
+    ``plan_normalized``). Set ``SPARK_GRAFT_DUMP_PLANS=<path>`` to also
+    append the normalized strings (keyed by sha) for instability diffing."""
+    s = plan_normalized(df)
+    sha = hashlib.sha256(s.encode()).hexdigest()[:16]
+    dump = os.environ.get("SPARK_GRAFT_DUMP_PLANS")
+    if dump:
+        with open(dump, "a") as f:
+            f.write(json.dumps({"sha": sha, "plan": s}) + "\n")
+    return sha
 
 
 def main():
